@@ -1,37 +1,108 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Headline benchmark: one JSON line on stdout (the driver contract)
   * with per-query seconds, plus the same JSON written to a file
   * (GRAFT_BENCH_OUT, default BENCH_MEDIANS.json) so per-query numbers
   * survive driver-log truncation. GRAFT_BENCH_REPS > 1 runs each query
   * that many times and reports the per-query MEDIAN — the
-  * noise-controlled artifact checked in per round. */
+  * noise-controlled artifact checked in per round. A key whose every
+  * rep throws gets no time: it is listed under "failed" and left out
+  * of "queries" and "total". */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Per-key seconds of a suite: `min` is the per-key MIN over suite
+    * passes, `median` the per-key median over them; a key with no
+    * successful rep in any pass appears only in `failed`. */
+  private[graft] final case class Timings(min: Seq[(String, Double)],
+                                          median: Seq[(String, Double)],
+                                          failed: Seq[String])
+
+  /** Where the JSON goes. *MEDIANS* files are reserved for
+    * noise-controlled (reps >= 3), full-suite, failure-free runs: a
+    * single-rep pass writing over the committed medians is exactly the
+    * artifact confusion that faked a regression in r5, and a
+    * GRAFT_BENCH_ONLY subset run at reps>=3 clobbered the committed
+    * 82-query medians with 4 queries in r8. A run with a failed key
+    * always lands in BENCH_LAST_RUN.json; otherwise an explicit
+    * GRAFT_BENCH_OUT=*MEDIANS* that doesn't qualify is refused
+    * (the stdout contract — the driver's JSON line — is unaffected). */
+  private[graft] def outFileFor(requested: Option[String], reps: Int,
+                                subsetRun: Boolean, anyFailed: Boolean): String =
+    if (anyFailed) "BENCH_LAST_RUN.json"
+    else if (reps >= 3 && !subsetRun) requested.getOrElse("BENCH_MEDIANS.json")
+    else requested.filterNot(_.toUpperCase(java.util.Locale.ROOT).contains("MEDIANS"))
+      .getOrElse("BENCH_LAST_RUN.json")
+
+  /** Times every key of `qlist`, in order, `runs` suite passes of
+    * `reps` back-to-back reps each; a rep is `fn(spark, sfDir).count()`.
+    * A rep that throws contributes no time (stderr names the key).
+    *
+    * Reps run back-to-back (warm steady-state: JIT, broadcasts, OS
+    * caches), with STALL DETECTION on top: the box (a microVM) takes
+    * occasional multi-second host stalls under full 32-thread load,
+    * and a stall spanning a whole rep group poisons even the median
+    * (measured: the same query 3.2s alone vs 8-44s inside a long
+    * run, the spike moving between queries run to run; interleaving
+    * reps across suite passes was tried and rejected — it
+    * decorrelates stalls but destroys the warm state the artifact is
+    * meant to measure, inflating the suite 60 → 110s). A group whose
+    * median exceeds 2× its min (+0.2s floor) is presumed stalled and
+    * re-measured ONCE; the smaller group median wins. Work bound:
+    * ≤ 2 rep groups per query.
+    *
+    * The host also takes MINUTES-long contention waves (all reps of a
+    * group uniformly 10-40× slow, so the in-group detector cannot
+    * fire — measured: the same query 58s median mid-wave, 2.4s
+    * minutes later). `runs` > 1 repeats the whole suite (~10 min apart
+    * by construction) and the per-key MIN of run-medians is the
+    * contention-immune comparable: a wave must cover every run to
+    * survive. */
+  private[graft] def timeSuite(spark: SparkSession, sfDir: String,
+                               qlist: Seq[(String, Query)],
+                               reps: Int, runs: Int): Timings = {
+    def once(name: String, fn: Query): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        val why = String.valueOf(e.getMessage).takeWhile(_ != '\n')
+        System.err.println(s"[bench] $name failed: $why")
+        None
+      }
+    }
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+    // (median, min) of the group's successful reps; None if all threw
+    def groupMedian(name: String, fn: Query): Option[(Double, Double)] = {
+      val times = (1 to reps).flatMap(_ => once(name, fn))
+      if (times.isEmpty) None else Some((median(times), times.min))
+    }
+    def onePass(): Map[String, Double] = qlist.flatMap { case (name, fn) =>
+      groupMedian(name, fn).map { case (med1, min1) =>
+        val med =
+          if (reps >= 3 && med1 > 2 * min1 + 0.2) {
+            System.err.println(
+              f"[bench] $name rep group looks stalled (median $med1%.2f vs min $min1%.2f); re-measuring")
+            groupMedian(name, fn).fold(med1)(g => math.min(med1, g._1))
+          } else med1
+        name -> med
+      }
+    }.toMap
+    val allRuns = (1 to runs).map { r =>
+      if (runs > 1) System.err.println(s"[bench] suite pass $r/$runs")
+      onePass()
+    }
+    val perKey = qlist.map { case (name, _) => name -> allRuns.flatMap(_.get(name)) }
+    val timed = perKey.filter(_._2.nonEmpty)
+    Timings(
+      timed.map { case (name, ts) => name -> ts.min },
+      timed.map { case (name, ts) => name -> median(ts) },
+      perKey.collect { case (name, ts) if ts.isEmpty => name })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("GRAFT_BENCH_REPS", "1").toInt
-    // *MEDIANS* files are reserved for noise-controlled (reps >= 3)
-    // runs: a single-rep pass writing over the committed medians is
-    // exactly the artifact confusion that faked a regression in r5.
-    // Unqualified runs land in BENCH_LAST_RUN.json; an explicit
-    // GRAFT_BENCH_OUT=*MEDIANS* with reps < 3 is refused (stdout
-    // contract — the driver's JSON line — is unaffected either way).
-    val requestedOut = sys.env.get("GRAFT_BENCH_OUT")
-    // A medians file must also cover the FULL query set: a
-    // GRAFT_BENCH_ONLY subset run at reps>=3 clobbered the committed
-    // 82-query medians with 4 queries in r8 — same artifact confusion,
-    // second axis.
-    val subsetRun = sys.env.get("GRAFT_BENCH_ONLY").exists(_.trim.nonEmpty)
-    val outFile =
-      if (reps >= 3 && !subsetRun) requestedOut.getOrElse("BENCH_MEDIANS.json")
-      else requestedOut match {
-        case Some(p) if !p.toUpperCase(java.util.Locale.ROOT).contains("MEDIANS") => p
-        case other =>
-          other.foreach(p => System.err.println(
-            s"[bench] refusing to write $p (reps=$reps, subset=$subsetRun); writing BENCH_LAST_RUN.json"))
-          "BENCH_LAST_RUN.json"
-      }
     val spark = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
@@ -62,66 +133,23 @@ object Bench {
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
     spark.range(1000000L).selectExpr("md5(cast(id as string)) h")
       .agg(org.apache.spark.sql.functions.min("h")).count()
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
     // dev convenience: GRAFT_BENCH_ONLY=d4_ngram_jaccard,a2_... times a
     // subset (driver contract unchanged when unset)
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val qlist = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Reps run back-to-back (warm steady-state: JIT, broadcasts, OS
-    // caches), with STALL DETECTION on top: the box (a microVM) takes
-    // occasional multi-second host stalls under full 32-thread load,
-    // and a stall spanning a whole rep group poisons even the median
-    // (measured: the same query 3.2s alone vs 8-44s inside a long
-    // run, the spike moving between queries run to run; interleaving
-    // reps across suite passes was tried and rejected — it
-    // decorrelates stalls but destroys the warm state the artifact is
-    // meant to measure, inflating the suite 60 → 110s). A group whose
-    // median exceeds 2× its min (+0.2s floor) is presumed stalled and
-    // re-measured ONCE; the smaller group median wins. Work bound:
-    // ≤ 2 rep groups per query.
-    def groupMedian(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double) = {
-      val times = (1 to reps).map(_ => once(fn)).sorted
-      (times(times.length / 2), times.head)
-    }
-    def onePass(): Seq[(String, Double)] = qlist.map { case (name, fn) =>
-      val (med1, min1) = groupMedian(fn)
-      val med =
-        if (reps >= 3 && med1 > 2 * min1 + 0.2) {
-          System.err.println(
-            f"[bench] $name rep group looks stalled (median $med1%.2f vs min $min1%.2f); re-measuring")
-          math.min(med1, groupMedian(fn)._1)
-        } else med1
-      name -> med
-    }
-    // The host also takes MINUTES-long contention waves (all reps of a
-    // group uniformly 10-40× slow, so the in-group detector cannot
-    // fire — measured: the same query 58s median mid-wave, 2.4s
-    // minutes later). GRAFT_BENCH_RUNS=N repeats the whole suite N
-    // times (~10 min apart by construction) and takes the per-query
-    // MIN of run-medians: a wave must cover every run to survive.
     val runs = sys.env.getOrElse("GRAFT_BENCH_RUNS", "1").toInt
-    val allRuns = (1 to runs).map { r =>
-      if (runs > 1) System.err.println(s"[bench] suite pass $r/$runs")
-      onePass().toMap
-    }
-    val results = qlist.map { case (name, _) =>
-      name -> allRuns.map(_(name)).min
-    }
     // carry BOTH statistics when several suite passes ran: the min is
     // the contention-immune round-over-round comparable, the median
     // shows drift — readers shouldn't have to re-derive one from
     // BENCH_HISTORY (r12 verdict item 6/5)
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-    val resultsMed = qlist.map { case (name, _) =>
-      name -> median(allRuns.map(_(name)))
-    }
+    val Timings(results, resultsMed, failed) = timeSuite(spark, sfDir, qlist, reps, runs)
+    val subsetRun = only.exists(_.exists(_.nonEmpty))
+    val requestedOut = sys.env.get("GRAFT_BENCH_OUT")
+    val outFile = outFileFor(requestedOut, reps, subsetRun, failed.nonEmpty)
+    requestedOut.filter(_ != outFile).foreach(p => System.err.println(
+      s"[bench] refusing to write $p (reps=$reps, subset=$subsetRun, failed=${failed.length}); writing $outFile"))
     // decomposition aid: each stream drain pays a fixed micro-batch
     // machinery cost (source listing, planning, state-store setup,
     // sink/checkpoint commits) that is NOT query work; measure it once
@@ -133,9 +161,7 @@ object Bench {
     // timing, and a floor with zero successful reps is reported as an
     // error field instead of a bogus median of failure latencies.
     // the partition count actually measured: the same sizing rule the
-    // drains use (8 parts at the suite-typical state volume), INCLUDING
-    // the GRAFT_STREAM_PARTS env override — a hardcoded 8 here recorded
-    // a count the run didn't use whenever the override was set
+    // drains use (8 parts at the suite-typical state volume)
     val floorParts = graft.streaming.Streams.sizedParts(8 * 65536L)
     val streamQs = results.count(_._1.contains("_stream_"))
     val (floor, floorFails) =
@@ -158,6 +184,7 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedField = failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     val floorField =
       if (streamQs == 0) ""
       else if (floor < 0)
@@ -178,7 +205,7 @@ object Bench {
         s""","value_median_of_runs":${resultsMed.map(_._2).sum},"queries_median_of_runs":$mqs"""
       }
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"runs":$runs,"queries":$qs$floorField$medianField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"runs":$runs,"queries":$qs$failedField$floorField$medianField,"sf":"$sfDir"}"""
     println(json)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     catch { case e: Exception =>
@@ -224,7 +251,7 @@ object Bench {
     val compactFloor =
       if (streamQs == 0 || floor < 0) ""
       else s""","stream_drain_floor_s":${r3(floor)},"total_ex_drain_floor":${r3(total - floor * streamQs)}"""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"runs":$runs,"n_queries":${results.length},"keys":"query-name prefixes; full map in BENCH_HISTORY.jsonl","queries":$compactQs$compactFloor,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"runs":$runs,"n_queries":${results.length},"keys":"query-name prefixes; full map in BENCH_HISTORY.jsonl","queries":$compactQs$failedField$compactFloor,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -144,10 +144,6 @@ object SparkEntry {
       ivfPqTopk(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  /** Test hygiene: forget the memoized eval legs (unpersists). */
-  private[graft] def clearEvalLegs(): Unit = {
-    bruteTruthCache.clear(); probeTopkCache.clear(); pqTopkCache.clear()
-  }
 
   /** recall@k of `approx` against `truth` (both (query_id, nn_id)
     * top-k tables) — the bounded eval aggregate a12 and a14 share. */
@@ -804,8 +800,8 @@ object SparkEntry {
 
     // IVF recall evaluation (recall@10 vs the exact brute-force truth):
     // the index-quality report a vector pipeline publishes next to its
-    // index-health card (a10) — what the standalone AnnSweep harness
-    // measures, as a first-class bounded operator (truth and probe legs
+    // index-health card (a10) — the recall ANN_SWEEP_r11/r12 record,
+    // as a first-class bounded operator (truth and probe legs
     // are both queries×10 rows; the join/aggregate never exceeds that)
     "a12_ivf_recall" -> ((s, d) => recallEval(
       bruteTruth(s, d).select(col("query_id"), col("nn_id")),
@@ -888,7 +884,7 @@ object SparkEntry {
     // table (one row per candidate — no per-subspace fan-out, no
     // aggregation shuffle), exact-cosine rerank only the top-200
     // shortlist (constant per query — the (codebook=64, rerank=200)
-    // knee measured by IvfPqTune on the planted-cluster corpus, where
+    // knee, NOTES_r12 §3, measured on the planted-cluster corpus, where
     // recall saturates by probed fraction ≈0.02 so a constant probe
     // holds ≥0.85; ANN_SWEEP_r12). All structures — cells, centroids,
     // group centroids, PQ codes — are shared corpus artifacts

@@ -799,7 +799,7 @@ object Ann {
     * partitions, never the full table. Per-query coarse cost drops
     * from k1·k2 to k1 + groupProbe·k2 ≈ O(√cells) when groupProbe is
     * O(1) (a9's constant-count probe) — the two-level analog of the
-    * IMI/[[coarseCellParamsL]] construction, applied at query time.
+    * IMI/[[coarseCellParams]] construction, applied at query time.
     *
     * Same determinism treatment as the flat probe at both stages
     * (6-dp rounded decimal-exact centroid cosines, integer
@@ -934,7 +934,7 @@ object Ann {
   /** ADC shortlist width per query before the exact-cosine rerank,
     * and the residual codebook size per subspace. Jointly measured on
     * the planted-cluster corpus at the PRODUCTION operating point
-    * (IvfPqTune r12: hierarchical probe, packed ADC,
+    * (NOTES_r12 §3: hierarchical probe, packed ADC,
     * nprobe=[[ivfPqNprobe]]): (k=16, rerank=50) 0.38, (16,200) 0.70,
     * (64,50) 0.50, (64,200) **0.864** at 1.0s, (256,200) 0.90 at 2.7×
     * the latency — the (64,200) knee is the pinned operating point.
@@ -1272,67 +1272,6 @@ object Ann {
     cellsFromIndex(buildCoarseIndex(emb, id, vec, emb.count(),
       targetCellSize, salt), id)
 
-  /** `emb` with the primary coarse-cell column attached. */
-  def withCoarseCell(emb: DataFrame, id: String, vec: String,
-                     targetCellSize: Int, cellCol: String = "cell",
-                     salt: String = CellSalt): DataFrame =
-    withCoarseCellIndexed(emb, id,
-      buildCoarseIndex(emb, id, vec, emb.count(), targetCellSize, salt), cellCol)
-
-  // ---------------------------------------------------------------
-  // Generalized L-level product quantizer (NOTES_r8 §2 implemented).
-  // The 2-level functions above stay the production path — at bench
-  // corpus sizes (n ≤ 2×10⁵, three orders below the L=3 crossover) a
-  // third level is pure constant overhead on every query and the
-  // oracle — but the construction below is the same one, parameterized
-  // by per-level anchor counts, and the L=2 instantiation is
-  // spec-pinned equal to the production path (ProductQuantizerSpec).
-  // ---------------------------------------------------------------
-
-  /** Per-level anchor counts for an L-level product quantizer with
-    * ~`n / targetCellSize` cells: level l takes ceil of the L−l'th
-    * root of the cells still to cover, so the product is ≥ cells and
-    * `coarseCellParamsL(n, B, 2)` reproduces [[coarseCellParams]]
-    * exactly (k1 = ceil(√cells), k2 = ceil(cells/k1)). Per-row
-    * assignment work is Σ ks = O(L·cells^(1/L)) anchor cosines — the
-    * deeper the product, the flatter the superlinear term
-    * (2·√C at L=2 → 3·∛C at L=3: 250k → 7.5k cosines/row at
-    * n = 10¹², and the anchor broadcast shrinks the same factor). */
-  def coarseCellParamsL(n: Long, targetCellSize: Int, levels: Int): Seq[Int] = {
-    require(targetCellSize > 0 && levels >= 1)
-    val cells = math.max(1L, (n + targetCellSize - 1) / targetCellSize)
-    val ks = new Array[Int](levels)
-    var remaining = cells.toDouble
-    for (l <- 0 until levels) {
-      val k = math.ceil(math.pow(remaining, 1.0 / (levels - l))).toInt
-      ks(l) = k
-      remaining = math.ceil(remaining / k)
-    }
-    require(n == 0 || n >= ks.map(_.toLong).sum,
-      s"corpus of $n rows cannot seat ${ks.sum} coarse anchors " +
-        s"(targetCellSize=$targetCellSize, levels=$levels) — rows would get NULL cells")
-    ks.toSeq
-  }
-
-  /** The smallest product depth L ≥ 2 at which the per-row anchor
-    * assignment stops dominating the per-row in-cell pair work — the
-    * NOTES_r8 §2 rule "raise L only while L·C^(1/L) > B·P(L)", with
-    * the measured probe fan-out model P(L) ≈ 1.25·L (probe-2 anchors
-    * only materialize near level boundaries; measured mean 2.5 at
-    * L=2). At B=64 this crosses 2→3 at n ≈ 4.1×10⁵ (= B³P²/4) and
-    * keeps deepening as the corpus grows; a 10¹²-row corpus gets the
-    * depth whose assignment term (L·C^(1/L) cosines/row) no longer
-    * exceeds the linear in-cell term. Capped at 8 levels — beyond it
-    * the probe fan-out bound, not the assignment, is the cost. */
-  def recommendedLevels(n: Long, targetCellSize: Int = DefaultTargetCellSize): Int = {
-    val cells = math.max(1L, (n + targetCellSize - 1) / targetCellSize).toDouble
-    def assign(l: Int): Double = l * math.pow(cells, 1.0 / l)
-    def inCell(l: Int): Double = targetCellSize.toDouble * (1.25 * l)
-    var l = 2
-    while (l < 8 && assign(l) > inCell(l)) l += 1
-    l
-  }
-
   /** The probed corpus FRACTION targeting recall@10 ≈ 0.8 on a
     * NEAR-UNIFORM corpus, from the model recall(f) ≈ 1 − (1−f)^2.7
     * (f(0.8) = 1 − 0.2^(1/2.7) ≈ 0.449). Measured (ANN_SWEEP_r11,
@@ -1362,8 +1301,8 @@ object Ann {
     *    worst case): a query's true top-10 are mostly unclustered
     *    random directions, so recall is bought with the probed
     *    fraction of the corpus and nothing sublinear can hold it —
-    *    corpus physics, not an implementation artifact (the AnnSweep
-    *    LSH legs document the same collapse). The rule holds the
+    *    corpus physics, not an implementation artifact (the LSH legs
+    *    of ANN_SWEEP_r6.json document the same collapse). The rule holds the
     *    fraction: nprobe = ⌈f·cells⌉ with f from the measured curve
     *    — swept at sf0.01/sf0.1 over 25 query ids in ANN_SWEEP_r11,
     *    recall at the rule holds 0.76 / 0.74 (flat) across a 4×
@@ -1387,93 +1326,12 @@ object Ann {
       math.max(1L,
         math.min(cells, (fracNum * cells + fracDen - 1) / fracDen))).toInt
 
-  /** Per-row, per-level nearest coarse anchors for an L-level product:
-    * (id, lvl ∈ [0,L), idx ∈ [0,ks(lvl)), rn ∈ [1,probe]) — the exact
-    * [[anchorAssignments]] construction with the two hard-coded level
-    * buckets replaced by the `ks` partition of the one md5-ordered
-    * anchor list (level l owns ranks (Σ ks(<l), Σ ks(≤l)]). Same
-    * determinism treatment: rounded-cosine ranking, ties by idx. */
-  private[graft] def anchorAssignmentsL(emb: DataFrame, id: String, vec: String,
-                                        ks: Seq[Int], probe: Int,
-                                        salt: String): DataFrame = {
-    val key = md5(concat(lit(salt + ":"), col(id).cast("string")))
-    val starts = ks.scanLeft(0)(_ + _) // length L+1; starts(L) = total
-    val total = starts.last
-    val anchors = emb
-      .select(col(id).as("__aid"), col(vec).as("__avec"), key.as("__akey"))
-      .orderBy(col("__akey"), col("__aid")).limit(total)
-      .withColumn("__rk", row_number().over(
-        Window.orderBy(col("__akey"), col("__aid"))))
-      .select(
-        coalesce(ks.indices.map(l =>
-          when(col("__rk") <= starts(l + 1), lit(l))): _*).as("lvl"),
-        coalesce(ks.indices.map(l =>
-          when(col("__rk") <= starts(l + 1), col("__rk") - 1 - starts(l))): _*)
-          .cast("int").as("idx"),
-        col("__avec"))
-    emb.select(col(id), col(vec)).crossJoin(broadcast(anchors))
-      .select(col(id), col("lvl"), col("idx"),
-        Vec.cosine(col(vec), col("__avec")).as("__c"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col(id), col("lvl"))
-          .orderBy(col("__c").desc, col("idx").asc)))
-      .filter(col("rn") <= probe)
-      .select(col(id), col("lvl"), col("idx"), col("rn"))
-  }
-
-  /** A built L-level index: assignment table + per-level radices. */
-  final case class CoarseIndexN(asg: DataFrame, ks: Seq[Int])
-
-  /** Build an L-level coarse index (levels from [[recommendedLevels]]
-    * when not forced). `n` from cheap metadata, as [[buildCoarseIndex]]. */
-  def buildCoarseIndexL(emb: DataFrame, id: String, vec: String, n: Long,
-                        levels: Int,
-                        targetCellSize: Int = DefaultTargetCellSize,
-                        salt: String = CellSalt): CoarseIndexN = {
-    val ks = coarseCellParamsL(n, targetCellSize, levels)
-    CoarseIndexN(anchorAssignmentsL(emb, id, vec, ks, CellProbe, salt), ks)
-  }
-
-  /** Mixed-radix primary cell per row from an L-level index:
-    * cell = ((idx0·k1 + idx1)·k2 + idx2)… — `(idx0·k2 + idx1)` at
-    * L=2, i.e. [[cellsFromIndex]]'s formula. */
-  def cellsFromIndexL(ix: CoarseIndexN, id: String): DataFrame = {
-    val prim = ix.asg.filter(col("rn") === 1).groupBy(col(id))
-      .agg(
-        max(when(col("lvl") === 0, col("idx"))).cast("long").as("__x0"),
-        ix.ks.indices.tail.map(l =>
-          max(when(col("lvl") === l, col("idx"))).cast("long").as(s"__x$l")): _*)
-    val cell = ix.ks.indices.tail.foldLeft(col("__x0")) { (acc, l) =>
-      acc * ix.ks(l) + col(s"__x$l")
-    }
-    prim.select(col(id), cell.as("cell"))
-  }
-
-  /** [[nearDupPairsScaledIndexed]] over an L-level index: probe cells
-    * are the product of each level's ≤probe nearest anchors (fan-out
-    * bound probe^L; the measured realized mean stays near 1 + L/4
-    * because non-primary anchors only materialize near boundaries),
-    * then the same shared pair join. */
-  def nearDupPairsScaledIndexedL(emb: DataFrame, id: String, vec: String,
-                                 tau: Double, ix: CoarseIndexN,
-                                 subBlocks: Int = 8,
-                                 hotCellThreshold: Int = DefaultHotCellThreshold): DataFrame = {
-    val legs = ix.ks.indices.map { l =>
-      ix.asg.filter(col("lvl") === l)
-        .select(col(id), col("idx").as(s"__i$l"), col("rn").as(s"__r$l"))
-    }
-    val joined = legs.reduce((a, b) => a.join(b, id))
-    val cell = ix.ks.indices.tail.foldLeft(col("__i0").cast("long")) { (acc, l) =>
-      acc * ix.ks(l) + col(s"__i$l")
-    }
-    val primary = ix.ks.indices.map(l => col(s"__r$l") === 1).reduce(_ && _)
-    val probeCells = joined.select(col(id), cell.as("cell"), primary.as("__primary"))
-    pairsFromProbeCells(emb, id, vec, tau, probeCells, subBlocks, hotCellThreshold)
-  }
-
-  /** Embedding near-dup pairs over CORPUS-PROPORTIONAL coarse cells —
-    * the scale tier of [[nearDupPairs]] (which stays as the
-    * fixed-cell exact form, the d4-grounds-d2 pattern).
+  /** Embedding near-dup pairs over CORPUS-PROPORTIONAL coarse cells,
+    * from a pre-built (usually persisted and shared) [[CoarseIndex]] —
+    * the scale tier of [[nearDupPairs]] (which stays as the fixed-cell
+    * exact form, the d4-grounds-d2 pattern). The d5/d8/a3/a4 query
+    * family uses it so the anchor assignment runs once per corpus, not
+    * once per query.
     *
     * Blocking: each row's primary product cell (see [[coarseCells]]);
     * candidates = same-cell pairs. Boundary probing: the PROBE side
@@ -1496,28 +1354,15 @@ object Ann {
     * anyway would multiply the probe leg's vector exchange volume
     * ×subBlocks for nothing — at probe≈4 cells that was a ×32
     * per-row replication of the full vector through the shuffle,
-    * now ×probe for cold cells. The per-cell decision is made from
-    * the same assignment table (one narrow aggregation, broadcast
-    * back onto both legs), and both legs agree on it, so the output
-    * pair set is bit-identical to unconditional sharding (spec-pinned).
+    * now ×probe for cold cells (EXCHANGE_AB_r8.json). The per-cell
+    * decision is made from the same assignment table (one narrow
+    * aggregation, broadcast back onto both legs), and both legs agree
+    * on it, so the output pair set is bit-identical to unconditional
+    * sharding (spec-pinned).
     *
     * In-cell pair work: ~n·targetCellSize·probeCells = LINEAR in the
     * corpus (the fixed-10-cell form measured 18× wall for 10× data;
-    * ScaleProbe's embeddings_8x leg measures this one). */
-  def nearDupPairsScaled(emb: DataFrame, id: String, vec: String,
-                         tau: Double,
-                         targetCellSize: Int = DefaultTargetCellSize,
-                         subBlocks: Int = 8,
-                         salt: String = CellSalt,
-                         hotCellThreshold: Int = DefaultHotCellThreshold): DataFrame =
-    nearDupPairsScaledIndexed(emb, id, vec, tau,
-      buildCoarseIndex(emb, id, vec, emb.count(), targetCellSize, salt),
-      subBlocks, hotCellThreshold)
-
-  /** [[nearDupPairsScaled]] over a pre-built (usually persisted and
-    * shared) [[CoarseIndex]] — the form the d5/d8/a3/a4 query family
-    * uses so the anchor assignment runs once per corpus, not once per
-    * query. */
+    * SCALE_r17.json embeddings_8x_vs_1x measures this one). */
   def nearDupPairsScaledIndexed(emb: DataFrame, id: String, vec: String,
                                 tau: Double, ix: CoarseIndex,
                                 subBlocks: Int = 8,
@@ -1532,18 +1377,6 @@ object Ann {
       .select(col(id),
         (col("__i0").cast("long") * k2 + col("__i1")).as("cell"),
         (col("__r0") === 1 && col("__r1") === 1).as("__primary"))
-    pairsFromProbeCells(emb, id, vec, tau, probeCells, subBlocks, hotCellThreshold)
-  }
-
-  /** The pair join downstream of a (id, cell, __primary) probe-cell
-    * table — shared by the production 2-level path and the
-    * generalized L-level path ([[nearDupPairsScaledIndexedL]]): hot
-    * cells flagged from primary occupancy, adaptive sub-block
-    * sharding, prenormed cosine, min-cell/max-cos pair collapse. */
-  private def pairsFromProbeCells(emb: DataFrame, id: String, vec: String,
-                                  tau: Double, probeCells: DataFrame,
-                                  subBlocks: Int,
-                                  hotCellThreshold: Int): DataFrame = {
     // cells worth sharding: primary occupancy above the threshold —
     // a narrow (cell, count) aggregate, broadcast onto both legs
     val hotCells = probeCells.filter(col("__primary"))

@@ -125,12 +125,13 @@ object Dedup {
     * almost nothing while paying an extra dedup + verify pass
     * (measured 2.4× slower at sf0.1); Zipf-ish boilerplate → the top
     * shingles carry most of Σdf² and the prefix excises them
-    * (ScaleProbe's hot-shingle leg measures the win). Note the prefix
-    * plan's leverage also grows with tau (prefix fraction ≈ 1−tau):
-    * at high thresholds it indexes only the rare tail of each doc; at
-    * tau ≈ 0.1 it indexes ~90% of every doc and candidate volume
-    * approaches the direct join's, with extra passes on top — PPJoin
-    * is a high-threshold design (its paper sweeps 0.8–0.95).
+    * (SCALE_r17.json hot_shingle_jaccard_boilerplate_heavy_tau08).
+    * Note the prefix plan's leverage also grows with tau (prefix
+    * fraction ≈ 1−tau): at high thresholds it indexes only the rare
+    * tail of each doc; at tau ≈ 0.1 it indexes ~90% of every doc and
+    * candidate volume approaches the direct join's, with extra passes
+    * on top — PPJoin is a high-threshold design (its paper sweeps
+    * 0.8–0.95).
     * Exactness does not depend on the routing decision. */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
                         n: Int, tau: Double,
@@ -233,7 +234,7 @@ object Dedup {
     * candidate × n_a, and the one-sided size bound keeps every
     * (small a, larger b) candidate the two-sided Jaccard bound would
     * drop, so on a flat-df corpus the arm is not merely slower but
-    * explosive (X16Probe at sf1: >60 GB of shuffle spill, DNF — see
+    * explosive (NOTES_r12 §4, sf1: >60 GB of shuffle spill, DNF — see
     * [[containmentDirect]]). It repays only when hot shingles
     * dominate Σdf² AND their excision collapses the candidate set,
     * which is the regime the router gates on. Exactness does not
@@ -273,7 +274,7 @@ object Dedup {
   /** The direct containment plan: full postings self-join with the
     * one-sided size bound (shared ≤ n_b, so C ≥ tau needs
     * n_b ≥ tau·n_a) — the measured-optimal arm on flat-df corpora,
-    * where the prefix arm LOSES CATASTROPHICALLY (X16Probe at sf1:
+    * where the prefix arm LOSES CATASTROPHICALLY (NOTES_r12 §4, sf1:
     * the prefix verify join fans candidates × n_a under the one-sided
     * bound and exhausted >60 GB of shuffle spill before finishing —
     * vs ~35s direct; the asymmetric bound keeps every (small a,
@@ -500,9 +501,10 @@ object Dedup {
     * the bucket), and the key width is (chunks−maxHamming) pieces, not
     * one: with the default chunks = 2·maxHamming the keys carry ~16 of
     * the 32 bits, so a corpus hot in any one bit range still shards
-    * across the other pieces' values — the planted-hot-chunk ScaleProbe
-    * suite measures the difference. Only fingerprint-near-equal groups
-    * collide on every key, and those emit output pairs anyway. */
+    * across the other pieces' values — SCALE_r17.json hot_bucket
+    * measures the difference on a planted hot chunk. Only
+    * fingerprint-near-equal groups collide on every key, and those
+    * emit output pairs anyway. */
   def simhashHammingPairs(docs: DataFrame, id: String, text: String,
                    chunks: Int, maxHamming: Int): DataFrame =
     simhashPairsFromFp(
@@ -510,9 +512,8 @@ object Dedup {
       id, maxHamming, chunks)
 
   /** The combination-join core of `simhashHammingPairs`, over precomputed
-    * fingerprints (`simhash` column) — also the probe surface for the
-    * ScaleProbe hot-bucket suite. `chunks` ≤ maxHamming means "use the
-    * default" (2·maxHamming, floored at maxHamming+1). */
+    * fingerprints (`simhash` column). `chunks` ≤ maxHamming means
+    * "use the default" (2·maxHamming, floored at maxHamming+1). */
   def simhashPairsFromFp(fp: DataFrame, id: String, maxHamming: Int,
                          chunks: Int = 0): DataFrame = {
     val t = if (chunks > maxHamming) chunks

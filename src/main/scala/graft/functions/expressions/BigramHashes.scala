@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * MessageDigest directly, and no bigram or word String is ever
   * materialized. Cuts the digest count per bigram from 3 to ~2 and
   * removes both substring scans — measured 0.96 → ~0.5s on the sf1
-  * hashing leg (X28Probe). Texts with fewer than two words contribute
+  * hashing leg (OPTIMIZATION_r18 §10). Texts with fewer than two words contribute
   * an empty array (the `shortAsSelf = false` ngram semantics); the
   * split keeps empty tokens (Spark split / DuckDB string_split parity
   * on double/trailing spaces), exactly like [[WordShingles]].

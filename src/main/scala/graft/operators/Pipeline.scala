@@ -301,7 +301,7 @@ object Pipeline {
     * exchanges differ and ReuseExchange never fires) — left lazy, the
     * token-level explode + aggregation runs TWICE, the dominant cost
     * of all three plans (x17 at sf1 measured 4.2s lazy vs 1.5s
-    * materialized — X17Probe). This is the classic two-pass tf-idf
+    * materialized — NOTES_r11 §7). This is the classic two-pass tf-idf
     * shape: at scale the intermediate is the same volume the exchange
     * writes anyway, and a production pipeline persists it as a table.
     * (Eager job at DataFrame-construction time: the ts4 probe
@@ -327,7 +327,7 @@ object Pipeline {
     * integer until the final rounded ratio. */
   def unigramLmProfile(docs: DataFrame, id: String, text: String): DataFrame =
     // NOT [[docWordTf]]: x11 is the one consumer measured FASTER lazy
-    // than checkpointed (1.49s vs 1.70s at sf1, X11Probe) — its single
+    // than checkpointed (1.49s vs 1.70s at sf1, NOTES_r11 §7) — its single
     // downstream aggregation doesn't amortize a PRIVATE
     // materialization (a shared warm one — ClusterCache.docWordTf —
     // is better still, and is what SparkEntry wires)
@@ -444,14 +444,13 @@ object Pipeline {
     * bigram (`min(w|ah) ⊔ ' ' ⊔ min(w|th)` == the old per-group
     * min(bigram) — each 60-bit word hash names one word, the same
     * no-collision granularity the (bgh, ah, th) keying is already
-    * built on; X28Probe + R18OpsSpec pin bit-equality with the
+    * built on; R18OpsSpec pins bit-equality with the
     * payload-carrying form). One broadcast total, TakeOrdered top-k —
     * the ranked set never leaves a bounded heap. `minCount` prunes
     * the hapax tail (the classic PMI degenerate: two words seen once,
     * together — perfect PMI, zero evidence) before the joins, so the
     * joined volume is the frequent-bigram table, not the bigram
-    * vocabulary. Measured sf1: 2.23 → 0.92s (X28Probe, reps=5
-    * interleaved medians). */
+    * vocabulary. Measured sf1: 2.45 → 0.93s (OPTIMIZATION_r18 §10). */
   def pmiCollocations(docs: DataFrame, docWord: DataFrame,
                       id: String, text: String,
                       minCount: Int, k: Int): DataFrame = {

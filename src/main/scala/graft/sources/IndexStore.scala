@@ -435,7 +435,7 @@ object IndexStore {
 
   /** Build and persist ALL index artifacts for `dir`'s corpus,
     * OVERWRITING any present (the measurement/rewrite entry point —
-    * IndexAb, IndexStoreSpec). Callers must be in build mode with
+    * IndexStoreSpec). Callers must be in build mode with
     * fresh caches (GRAFT_INDEX_TABLES=0 or no valid tables on disk):
     * a getter that already LOADED artifact X would make this overwrite
     * the very table it reads. First-touch production priming is

@@ -46,15 +46,13 @@ object Streams {
     * drain sizes its own partitions from its expected STATE rows (one
     * partition per ~64k state rows, clamped to [4, 32]):
     * session aggs carry O(sessions) state and win with more partitions
-    * as input grows (StreamProbe sf1, 1M events: 16 parts 4.8s vs 4
+    * as input grows (SURVEY §6, sf1, 1M events: 16 parts 4.8s vs 4
     * parts 7.0s), while watermark-bounded join state stays small and
     * MORE partitions only multiply state-store setup (ts17 sf1: 3.0s at
-    * 4 vs 7.2s at 32). GRAFT_STREAM_PARTS overrides everything; at
-    * production scale the same rule sizes to state volume (keys ×
-    * state row), never to scan width. */
+    * 4 vs 7.2s at 32). At production scale the same rule sizes to
+    * state volume (keys × state row), never to scan width. */
   private[graft] def sizedParts(stateRows: Long): Int =
-    sys.env.get("GRAFT_STREAM_PARTS").map(_.toInt).getOrElse(
-      math.min(32L, math.max(4L, stateRows / 65536L)).toInt)
+    math.min(32L, math.max(4L, stateRows / 65536L)).toInt
 
   /** ONE shared cloned session per parent (same SparkContext, own SQL
     * conf) carrying all drains — concurrent batch queries on the parent
@@ -401,40 +399,5 @@ object Streams {
     val cand = graft.sources.Tables.events(spark, sfDir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("exact"))
     graft.functions.Sketch.cmsFinalize(drained, cand, "user_id", depth, width, k)
-  }
-
-  /** ts12 floor decomposition (dev; StreamProbe's breakdown mode): the
-    * SAME session aggregation drained through a foreachBatch row-count
-    * sink — identical state-store work, but the ~1M-session result
-    * stays distributed instead of being collected into the driver-side
-    * memory-sink table. The memory-sink drain minus this = the
-    * harness's collect share of the ts12 wall; this minus the batch
-    * twin = the state-store machinery share. */
-  private[graft] def sessionizeStreamCountOnly(spark: SparkSession,
-                                               sfDir: String,
-                                               gap: String): Long = {
-    val agg = eventStream(drainSession(spark, sourceRows(spark, sfDir)), sfDir)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        unix_micros(min(col("ts"))).as("start_us"),
-        unix_micros(max(col("ts"))).as("end_us"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-    val (base, durable) = checkpointConf
-    val ckpt =
-      if (durable) s"$base/ts12_foreach"
-      else s"$base/ts12_foreach-${System.nanoTime()}"
-    @volatile var n = 0L
-    val q = agg.writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                     _: Long) => { n = df.count(); () })
-      .start()
-    try q.awaitTermination()
-    finally if (!durable)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    n
   }
 }

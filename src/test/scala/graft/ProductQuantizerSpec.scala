@@ -3,12 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
 
-/** The generalized L-level product quantizer (NOTES_r8 §2
-  * implemented): the L=2 instantiation must be the production
-  * 2-level path exactly (params, cells, pair set), the L=3
-  * instantiation must be a working index (total cells, twin recall,
-  * determinism), and the crossover rule must reproduce the
-  * documented thresholds. */
+/** The production 2-level quantizer's a9 IVFPQ path (coarse probe,
+  * packed ADC shortlist, exact rerank) and its hierarchical probe:
+  * degenerate settings must reproduce exact search, the a9 operating
+  * point must stay bounded and deterministic. */
 class ProductQuantizerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,86 +25,6 @@ class ProductQuantizerSpec extends SparkSpec {
     (base ++ twins).toDF("vec_id", "embedding").localCheckpoint()
   }
   private val n = (nBase + nTwins).toLong
-
-  test("coarseCellParamsL at L=2 reproduces the production (k1, k2) exactly") {
-    // n = 1 fails the anchor-seating guard in BOTH paths (by design)
-    for (sz <- Seq(2L, 63L, 64L, 65L, 500L, 4096L, 65537L, 1000000L, 123456789L)) {
-      val (k1, k2) = Ann.coarseCellParams(sz, Ann.DefaultTargetCellSize)
-      assert(Ann.coarseCellParamsL(sz, Ann.DefaultTargetCellSize, 2) == Seq(k1, k2),
-        s"n=$sz")
-    }
-  }
-
-  test("coarseCellParamsL covers the cell count at any depth and fails loudly when it can't") {
-    for (sz <- Seq(1000L, 100000L, 10000000L); l <- 2 to 5) {
-      val ks = Ann.coarseCellParamsL(sz, 64, l)
-      val cells = (sz + 63) / 64
-      assert(ks.map(_.toLong).product >= cells, s"n=$sz L=$l ks=$ks")
-      assert(ks.forall(_ >= 1))
-    }
-    // a corpus too small to seat its anchors must not silently NULL out
-    assertThrows[IllegalArgumentException] {
-      Ann.coarseCellParamsL(2L, 1, 2) // 2 cells want k1+k2 = 3 > n
-    }
-  }
-
-  test("recommendedLevels follows the NOTES_r8 §2 crossover rule") {
-    // below n* = B³P²/4 ≈ 4.1e5 (B=64, P=2.5) the 2-level assignment
-    // term is already dominated — stay at L=2
-    for (sz <- Seq(1000L, 20000L, 128000L, 400000L))
-      assert(Ann.recommendedLevels(sz) == 2, s"n=$sz")
-    // just past the crossover the rule deepens
-    assert(Ann.recommendedLevels(500000L) >= 3)
-    // monotone nondecreasing in n, and a 10^12-row corpus (the
-    // literal 100 TB point) never stays at the O(n^1.5) depth
-    val depths = Seq(1000L, 1000000L, 1000000000L, 1000000000000L)
-      .map(Ann.recommendedLevels(_))
-    assert(depths == depths.sorted)
-    assert(depths.last >= 3)
-  }
-
-  test("L=2 generalized index equals the production 2-level path (cells and pairs)") {
-    val prod = Ann.buildCoarseIndex(corpus, "vec_id", "embedding", n)
-    val gen = Ann.buildCoarseIndexL(corpus, "vec_id", "embedding", n, levels = 2)
-    assert(gen.ks == Seq(prod.k1, prod.k2))
-    val cellsProd = Ann.cellsFromIndex(prod, "vec_id")
-      .as[(Long, Long)].collect().toSet
-    val cellsGen = Ann.cellsFromIndexL(gen, "vec_id")
-      .as[(Long, Long)].collect().toSet
-    assert(cellsGen == cellsProd)
-    val pairsProd = Ann.nearDupPairsScaledIndexed(
-        corpus, "vec_id", "embedding", 0.25, prod)
-      .select("id_a", "id_b", "cell", "cos")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val pairsGen = Ann.nearDupPairsScaledIndexedL(
-        corpus, "vec_id", "embedding", 0.25, gen)
-      .select("id_a", "id_b", "cell", "cos")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(pairsGen == pairsProd)
-  }
-
-  test("L=3 index: one in-range cell per row, twins recovered, deterministic") {
-    val ix = Ann.buildCoarseIndexL(corpus, "vec_id", "embedding", n, levels = 3)
-    assert(ix.ks.length == 3)
-    val cells = Ann.cellsFromIndexL(ix, "vec_id")
-    assert(cells.count() == n)
-    assert(cells.filter(col("cell").isNull ||
-      col("cell") < 0 ||
-      col("cell") >= ix.ks.map(_.toLong).product).isEmpty)
-    // planted cos >= ~0.99 twins survive the deeper blocking: the
-    // probe legs cover an argmax flip per level, and a twin pair's
-    // anchors only flip near boundaries
-    val pairs = Ann.nearDupPairsScaledIndexedL(
-        corpus, "vec_id", "embedding", 0.9, ix)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val found = (0 until nTwins).count(i => pairs.contains((i.toLong, 1000L + i)))
-    assert(found >= (nTwins * 0.9).toInt, s"only $found/$nTwins twins at L=3")
-    // deterministic across independent builds
-    val again = Ann.nearDupPairsScaledIndexedL(corpus, "vec_id", "embedding", 0.9,
-        Ann.buildCoarseIndexL(corpus, "vec_id", "embedding", n, levels = 3))
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(again == pairs)
-  }
 
   // ---- a9 IVFPQ (coarse probe + ADC shortlist + exact rerank) ----
 

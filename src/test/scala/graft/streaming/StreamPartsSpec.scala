@@ -4,11 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-operator state-partition sizing rule: one partition per
   * ~64k expected state rows, clamped to [4, 32] (floor for tiny state,
-  * ceiling for the local harness; GRAFT_STREAM_PARTS overrides — not
-  * testable here without forking the JVM, exercised via StreamProbe). */
+  * ceiling for the local harness). */
 class StreamPartsSpec extends AnyFunSuite {
-  assume(sys.env.get("GRAFT_STREAM_PARTS").isEmpty)
-
   test("tiny state clamps to the floor") {
     assert(Streams.sizedParts(1L) == 4)
     assert(Streams.sizedParts(4 * 65536L) == 4)
